@@ -43,8 +43,15 @@ def sentinel_median(run):
 # Cross-core refusal (round-17 verdict item 2): the driver also benches at a
 # lower core count for its scaling measurement; comparing an 8-core run to a
 # 32-core record manufactures uniform phantom deltas. Records since round 18
-# carry "cpus"; when both sides carry it and disagree, refuse outright.
+# carry "cpus"; records before it were all taken at the 32-core record count.
+# A side that lacks it is assumed to be 32 (loudly), and a mismatch refuses.
+RECORD_CPUS = 32
 co, cn = old.get("cpus"), new.get("cpus")
+if (co is None) != (cn is None):
+    tag = "old" if co is None else "new"
+    print(f"WARNING: the {tag} run carries no 'cpus' — assuming {RECORD_CPUS} "
+          "(the record core count); rerun it to stamp its real core count")
+    co, cn = co or RECORD_CPUS, cn or RECORD_CPUS
 if co is not None and cn is not None and co != cn:
     print(f"REFUSED: cross-core comparison (old cpus={co}, new cpus={cn}) — "
           "core-count changes runtime for every key; rerun the new stamp at "

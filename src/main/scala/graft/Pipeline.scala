@@ -15,22 +15,27 @@ import graft.schema.{Comments, SchemaRegistry}
   * Where the reference does per-row work (EXISTS probe per insert, HTTP call
   * per comment, ordered python loop per chart), every stage here is a
   * set-based operator: one anti-join, one expression chain, one hash
-  * aggregate. At 100 TB nothing below collects to the driver; the only
-  * shuffles are the dedup anti-join key exchange and the final (tiny)
-  * per-class aggregates.
+  * aggregate. At 100 TB nothing below collects to the driver. Each source is
+  * scanned once; the only shuffles are the (platform, comment_id) dedup
+  * exchange, the enrich-once anti-join against the stored ids (a broadcast
+  * when that side is small), and whatever the caller adds downstream: the
+  * store write's (platform, day) clustering or a view's (tiny) per-class
+  * aggregate. Clean, score and moderate are one map-side projection.
   */
 object Pipeline {
 
   /** Entry point B (`Data Analysis/Reddit_4chan_Analysis.py:88-137`):
     * enrich-once ETL — skip ids already enriched, clean, score sentiment,
-    * classify moderation. */
+    * classify moderation. Sentiment is the native in-row scorer, so each row
+    * is scored from its own text alone (two platforms may reuse one
+    * `comment_id`) and the plan neither forks nor adds an exchange. */
   def enrich(comments: DataFrame, alreadyEnriched: DataFrame): DataFrame = {
     val delta = Relational.antiDedup(comments, alreadyEnriched, Seq("comment_id"))
     val cleaned = delta
       .withColumn("cleaned_body",
         TextFunctions.normalizeText(TextFunctions.stripUrls(col("body"))))
     Moderation.classify(
-      Sentiment.scoreByLexiconJoin(cleaned, "comment_id", "cleaned_body"),
+      Sentiment.scoreByLexiconNative(cleaned, "cleaned_body"),
       "cleaned_body")
   }
 

@@ -158,7 +158,7 @@ object DumpPlans {
       "q60_vader" -> "window lags for negation scope; lexicon BroadcastHashJoin; no UDF",
       "q61_asof_join" -> "as-of = union + ONE window sort on (key, ts); no range join",
       "q62_range_join" -> "interval join shuffles on time bins, then exact filter",
-      "q74_unified_pipeline" -> "3-source union + anti-join + lexicon broadcast; one final tiny agg",
+      "q74_unified_pipeline" -> "each source scanned once; 3-source union + broadcast anti-join; in-row native sentiment (no token explode or lexicon join); one final tiny agg",
       "q76_curation_chain" -> "all annotations in one scan; dedup exchange carries (sha2, id) only",
       "q78_tfidf_topk" -> "one TF exchange; DF and corpus-size joined as broadcasts; per-doc window",
       "q80_moving_average" -> "RANGE frame over per-day aggregate rows, never raw events",

@@ -14,14 +14,18 @@ import org.apache.spark.sql.functions._
   * threshold ladder. Capability parity (score + label columns), not bit parity
   * with NLTK.
   *
-  * Two formulations:
+  * Three formulations, bit-identical on scores (SentimentModerationSpec):
+  *  - [[scoreByLexiconNative]]: the codegen'd [[graft.functions.LexiconScore]]
+  *    byte loop, a pure map-side projection with no explode, join or
+  *    exchange. This is the production path: q34 and `Pipeline.enrich` use it.
   *  - [[scoreByLexiconJoin]]: tokens ⋈ broadcast lexicon + hash agg. Fully
-  *    relational — Catalyst sees everything, the lexicon broadcast is a few KB,
-  *    and the only shuffle is the per-doc partial/final agg. This is the
-  *    100 TB path AND the DuckDB-oracle-able path (lexicon inlined as VALUES).
+  *    relational and the shape the DuckDB oracle replays (lexicon inlined as
+  *    VALUES), but it explodes every token, shuffles twice (per-id agg, then
+  *    docs ⋈ sums) and reads `docs` twice. It keys the sums by `idCol`, so ids
+  *    must be unique: rows sharing an id get their merged score.
   *  - [[compoundUdf]]: a self-contained scalar UDF for API parity with the
-  *    reference's per-row call shape. Used in tests; the join form is preferred
-  *    in pipelines (UDFs are opaque to codegen).
+  *    reference's per-row call shape. Used in tests (UDFs are opaque to
+  *    codegen).
   */
 object Sentiment {
 
@@ -74,9 +78,10 @@ object Sentiment {
     * [[graft.functions.LexiconScore]] expression computes the identical
     * tenths sum in one byte loop per row, so scoring is a pure MAP-SIDE
     * projection: no token explode, no join, no aggregate, no exchange
-    * anywhere (PlanSpec pins the plan). The relational
-    * [[scoreByLexiconJoin]] stays for pipelines that want Catalyst to see
-    * the token relation (or a lexicon too big to bake into an expression);
+    * anywhere (PlanSpec pins the plan); `Pipeline.enrich` scores
+    * with it too. The relational [[scoreByLexiconJoin]] stays for callers
+    * that want Catalyst to see the token relation (or a lexicon too big to
+    * bake into an expression);
     * [[compoundUdf]] stays for per-row API parity with the reference.
     * All three agree bit-for-bit (SentimentModerationSpec).
     *

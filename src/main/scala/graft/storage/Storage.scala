@@ -16,10 +16,21 @@ object Storage {
 
   /** Write the canonical comment store partitioned by (platform, day):
     * every dashboard query (§2.2 q07–q10) filters on one or both, so scans
-    * prune to the matching directories before reading a byte. */
+    * prune to the matching directories before reading a byte.
+    *
+    * Rows are first hash-clustered by their output directory into
+    * `spark.sql.shuffle.partitions` tasks. Every (platform, day) directory
+    * then gets exactly ONE file per write, whatever the input's partitioning
+    * (unclustered, each task writes a file into every directory it touches:
+    * tasks × directories). A repartition with an explicit count is never
+    * coalesced by AQE, so the parquet encode and commit run on that many
+    * tasks even when the upstream plan has collapsed to one. One very large
+    * directory still lands on a single task. */
   def writePartitionedByDay(df: DataFrame, tsCol: String, path: String,
                             mode: SaveMode = SaveMode.Overwrite): Unit =
     df.withColumn("day", date_format(col(tsCol), "yyyy-MM-dd"))
+      .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("platform"), col("day"))
       .write.mode(mode)
       .partitionBy("platform", "day")
       .parquet(path)

@@ -65,6 +65,18 @@ class PipelineSpec extends SparkSpec {
     assert(sentiments("rc3") == "neutral")  // null body -> no tokens -> 0
   }
 
+  test("each row is scored from its own text when platforms share a comment_id") {
+    // reddit and youtube id spaces are independent: the same id on two
+    // platforms is two comments, and neither may borrow the other's words
+    val r = Seq(("politics", "p9", "good great", 1, 1704067200.0, "x1"))
+      .toDF("subreddit", "post_id", "body", "score", "created_utc", "comment_id")
+    val y = Seq(("v9", "t", "x1", "2024-01-01T00:02:00Z", "crash fail"))
+      .toDF("video_id", "video_title", "comment_id", "comment_time", "comment_text")
+    val out = Pipeline.run(r, chan.limit(0), y, Seq.empty[String].toDF("comment_id"))
+      .select("platform", "sentiment").as[(String, String)].collect().toMap
+    assert(out == Map("reddit" -> "positive", "youtube" -> "negative"))
+  }
+
   test("dashboard views: shares sum to 100 per platform, daily counts total") {
     val enriched = Pipeline.run(reddit, chan, youtube, Seq.empty[String].toDF("comment_id"))
     val share = Pipeline.sentimentShareByPlatform(enriched)

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Physical-plan assertions: the scale properties the engine relies on must
   * be visible in `.explain` — filters reaching the parquet scan, projections
@@ -20,6 +21,15 @@ class PlanSpec extends SparkSpec {
   }
 
   private def q(name: String): String = finalPlan(SparkEntry.queries(name)(spark, dir))
+
+  /** Every node of an executed plan, flattened THROUGH AQE stage
+    * boundaries (QueryStageExec is a leaf to TreeNode.collect, hiding
+    * everything the stage executed). */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case qs: QueryStageExec => flatten(qs.plan)
+    case other => other.children.flatMap(flatten)
+  })
 
   test("timestamp range filter is pushed down to the parquet scan (q07)") {
     val plan = q("q07_ts_range_filter")
@@ -58,14 +68,7 @@ class PlanSpec extends SparkSpec {
     // both lead()s must resolve in a single user-hash window stage — a
     // second per-lead exchange would double the shuffle for no reason
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case qs: QueryStageExec => flatten(qs.plan)
-      case other => other.children.flatMap(flatten)
-    })
     val userExchanges = flatten(df.queryExecution.executedPlan).collect {
       case s: ShuffleExchangeLike if (s.outputPartitioning match {
         case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "user_id"))
@@ -250,16 +253,8 @@ class PlanSpec extends SparkSpec {
     // walk the executed plan: the Filter carrying bloom_might_contain must
     // sit directly over the fact file scan with no shuffle in between —
     // that's the entire point (prune before paying the exchange)
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // flatten THROUGH AQE stage boundaries (QueryStageExec is a leaf to
-    // TreeNode.collect, hiding everything the stage executed)
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case qs: QueryStageExec => flatten(qs.plan)
-      case other => other.children.flatMap(flatten)
-    })
     val all = flatten(df.queryExecution.executedPlan)
     val bloomFilters = all.collect {
       case f: FilterExec if f.condition.exists(
@@ -1674,5 +1669,47 @@ class PlanSpec extends SparkSpec {
     val readSchemas = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
     assert(readSchemas.exists(l => l.contains("c0") && !l.contains("embedding")),
       s"the ADC path must score from codes without reading vectors:\n$plan")
+  }
+
+  test("Pipeline.run scans each source once: no explode, no comment_id join but the anti-join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_pipeline_plan").toString
+    def stage(name: String, df: DataFrame): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$base/$name")
+      spark.read.parquet(s"$base/$name")
+    }
+    val reddit = stage("reddit", Seq(
+      ("politics", "p1", "good great news", 3, 1704067200.0, "r1"),
+      ("politics", "p1", "bad crash", -1, 1704067260.0, "r2"),
+      ("economy", "p2", "slow fail", 0, 1704067320.0, "r3")
+    ).toDF("subreddit", "post_id", "body", "score", "created_utc", "comment_id"))
+    val chan = stage("chan", Seq(
+      ("1001", "<p>recession &amp; win</p>", "01/01/24(Mon)00:00:00", "anon", null.asInstanceOf[String])
+    ).toDF("post_number", "comment", "timestamp_raw", "name", "image_filename"))
+    val youtube = stage("youtube", Seq(
+      ("v1", "t", "y1", "2024-01-01T00:02:00Z", "great video love it")
+    ).toDF("video_id", "video_title", "comment_id", "comment_time", "comment_text"))
+    val already = stage("already", Seq("r3").toDF("comment_id"))
+    val out = Pipeline.run(reddit, chan, youtube, already)
+    assert(out.collect().length == 4) // r3 is already stored
+    val nodes = flatten(out.queryExecution.executedPlan)
+    val plan = out.queryExecution.executedPlan.toString
+    val scans = nodes.collect { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.getName).mkString(",") }
+    assert(scans.sorted == Seq("already", "chan", "reddit", "youtube"),
+      s"each source must be scanned exactly once, got $scans:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[GenerateExec]), s"scoring exploded tokens:\n$plan")
+    val idJoins = nodes.collect {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+        .exists(_.references.exists(_.name == "comment_id")) => j.joinType
+    }
+    // the optimizer pushes the anti-join below the union (one per source,
+    // all probing the one broadcast of the stored ids); any other join kind
+    // on comment_id would be scoring re-joining its own rows
+    assert(idJoins.nonEmpty && idJoins.forall(_ == LeftAnti),
+      s"the only comment_id join must be the enrich-once anti-join, got $idJoins:\n$plan")
   }
 }

@@ -35,6 +35,25 @@ class StorageSpec extends SparkSpec {
     assert(!plan.contains("PushedFilters: [IsNotNull(platform)"), plan)
   }
 
+  test("partitioned store writes exactly one file per (platform, day) directory") {
+    val path = java.nio.file.Files.createTempDirectory("graft_store_files").toString + "/store"
+    // 8 round-robin partitions: every input task holds rows of every directory
+    val df = (0 until 480).map { i =>
+      (Seq("reddit", "4chan", "youtube")(i % 3), s"c$i",
+        new Timestamp(Timestamp.valueOf("2024-01-01 00:00:00").getTime + (i % 4) * 86400000L))
+    }.toDF("platform", "comment_id", "created_ts").repartition(8)
+    Storage.writePartitionedByDay(df, "created_ts", path)
+    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.isDirectory))
+    val filesPerDir = dirs.map(d =>
+      s"${d.getParentFile.getName}/${d.getName}" ->
+        d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(filesPerDir.size == 12, s"expected 3 platforms x 4 days: $filesPerDir")
+    assert(filesPerDir.values.forall(_ == 1), s"more than one file per directory: $filesPerDir")
+    val back = spark.read.parquet(path).select("comment_id").as[String].collect()
+    assert(back.sorted.toSeq == (0 until 480).map(i => s"c$i").sorted)
+  }
+
   test("bucketed tables join without an exchange") {
     val left = (1L to 1000L).map(i => (i, s"l$i")).toDF("k", "lv")
     val right = (1L to 1000L).map(i => (i, s"r$i")).toDF("k", "rv")
